@@ -141,7 +141,7 @@ def main() -> None:
         print(json.dumps({"mode": "streaming", "sinks": counts}))
         return
 
-    from opentelemetry_collector_contrib_spark.operators.route import FIXTURE_ROUTES, sink_frames
+    from opentelemetry_collector_contrib_spark.operators.route import sink_frames
     from opentelemetry_collector_contrib_spark.plans.lineage import write_sinks_resumable
     from opentelemetry_collector_contrib_spark.plans.pipeline import (
         PipelineConfig,
@@ -151,27 +151,32 @@ def main() -> None:
 
     import uuid
 
-    from opentelemetry_collector_contrib_spark.plans.metrics import PipelineMetrics
+    from opentelemetry_collector_contrib_spark.plans.metrics import (
+        PipelineMetrics,
+        observe_rows,
+        stage_counts,
+    )
 
     metrics = PipelineMetrics(run_id=uuid.uuid4().hex)
     cfg = PipelineConfig(vectorized_parse=args.vectorized, repartition_conv=args.repartition_conv)
     with metrics.time_stage("build_and_persist"):
         if args.config:
-            from opentelemetry_collector_contrib_spark.plans.config import build_pipeline
+            from opentelemetry_collector_contrib_spark.plans.config import (
+                build_pipeline,
+                route_table_from_spec,
+            )
 
             with open(args.config) as f:
                 spec = json.load(f)
             routed = build_pipeline(spark, spec).persist()
-        else:
-            routed = build_routed(spark, args.input, cfg).persist()
-        metrics.input_rows = routed.count()
-    try:
-        if args.config:
-            from opentelemetry_collector_contrib_spark.plans.config import route_table_from_spec
-
             table = route_table_from_spec(spec)
         else:
+            routed = build_routed(spark, args.input, cfg).persist()
             table = cfg.routes
+        # the one action that fills the cache also counts every stage
+        metrics.stage_rows = stage_counts(routed, table)
+        metrics.input_rows = metrics.stage_rows["in"]
+    try:
         # a config with no routes section has no route_id column — the whole
         # stream is one sink, the single-exporter topology
         sinks = sink_frames(routed, table) if table is not None else {"all": routed}
@@ -183,8 +188,9 @@ def main() -> None:
 
             _, quarantined = split_quarantine(routed, fixture_rules())
             sinks["quarantine"] = quarantined
-        paths = write_sinks_resumable(routed, sinks, args.output, metrics=metrics)
-        counts = {name: spark.read.parquet(p).count() for name, p in paths.items()}
+        write_sinks_resumable(routed, sinks, args.output, metrics=metrics)
+        # observed on each write (or read from the manifest for a resumed sink)
+        counts = dict(metrics.sink_rows)
         with metrics.time_stage("aggregates"):
             if args.config:
                 from opentelemetry_collector_contrib_spark.plans.config import (
@@ -222,8 +228,9 @@ def main() -> None:
                     routed, ["conv_id", "role", "tool", "route_id", "sev", "status"]
                 )
             for name, adf in aggs.items():
-                adf.write.mode("overwrite").parquet(f"{args.output}/{name}")
-                counts[name] = adf.count()
+                observed, obs = observe_rows(adf)
+                observed.write.mode("overwrite").parquet(f"{args.output}/{name}")
+                counts[name] = obs.get["rows"]
         metrics.write(f"{args.output}/_metrics.json")
         print(json.dumps({"sinks": counts, "metrics": metrics.to_dict()}))
     finally:

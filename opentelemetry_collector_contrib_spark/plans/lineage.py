@@ -1,4 +1,4 @@
-"""Per-partition lineage manifest: the checkpoint/offset analogue.
+"""Per-sink lineage manifest: the checkpoint/offset analogue.
 
 Reference: the filelog receiver persists Metadata{Fingerprint, Offset,
 RecordNum, FileAttributes} per reader every poll cycle
@@ -6,14 +6,15 @@ RecordNum, FileAttributes} per reader every poll cycle
 internal/checkpoint/checkpoint.go:27,63) so a restart resumes at the last
 committed offset.
 
-Our unit of work is not a file offset but a (sink, output-file) cell:
-each sink write records one manifest row per written file —
-(run_id, sink, partition_id=file index, row_count, status, commit), counted
-from the written parquet itself (footer-level scan; never re-runs the
-upstream plan). A rerun loads the manifest and SKIPS sinks whose cells are
-all committed — idempotent resume with no duplicate rows (the exporter
-sending-queue retry semantics, made transactional the way the reference
-can't be).
+Our unit of work is not a file offset but a sink: each successful sink
+write records one manifest cell (run_id, sink, partition_id=0, row_count,
+status, commit). The row count is observed on the write itself
+(``DataFrame.observe``, the obsreport-counter analogue), never by
+re-reading the output or re-running the upstream plan. A rerun loads the
+manifest and SKIPS sinks that are committed — idempotent resume with no
+duplicate rows (the exporter sending-queue retry semantics, made
+transactional the way the reference can't be). Per-file row counts are
+the table format's business (Iceberg data-file stats), not the manifest's.
 
 In production the manifest is an Iceberg table and the commit id is the
 Iceberg snapshot id (atomic rename gives all-or-nothing per sink); in-sandbox
@@ -27,6 +28,8 @@ import os
 import time
 import uuid
 from dataclasses import asdict, dataclass
+
+from .metrics import observe_rows
 
 
 @dataclass
@@ -62,11 +65,11 @@ class LineageManifest:
     def cells_for(self, sink: str) -> list[LineageCell]:
         return [c for (s, _pid), c in sorted(self._cells.items()) if s == sink]
 
-    def record_sink(self, run_id: str, sink: str, partition_rows: list[int]) -> None:
-        commit = uuid.uuid4().hex
-        now = time.time()
-        for pid, rows in enumerate(partition_rows):
-            self._cells[(sink, pid)] = LineageCell(run_id, sink, pid, rows, "committed", commit, now)
+    def record_sink(self, run_id: str, sink: str, rows: int) -> None:
+        # drop cells an older manifest may hold for this sink, so the sink
+        # is exactly one committed cell
+        self._cells = {k: c for k, c in self._cells.items() if k[0] != sink}
+        self._cells[(sink, 0)] = LineageCell(run_id, sink, 0, rows, "committed", uuid.uuid4().hex, time.time())
         self._flush()
 
     def _flush(self) -> None:
@@ -92,21 +95,26 @@ def write_sinks_resumable(
 ) -> dict[str, str]:
     """Fan-out write with idempotent resume.
 
-    Skips any sink already fully committed in the manifest; records
-    per-partition row counts (via a partition-id rollup — one cheap agg per
-    sink, no collect of data rows) after each successful atomic write.
-    When a PipelineMetrics is passed (plans/metrics.py), per-sink rows,
-    wall times, and resume decisions are recorded on it.
+    Skips any sink already committed in the manifest. Each written sink
+    commits one manifest cell whose row count is observed on the write
+    itself: the frame handed to the writer carries a ``DataFrame.observe``
+    row counter, so the count costs no extra Spark job. When a
+    PipelineMetrics is passed (plans/metrics.py), per-sink rows, wall
+    times, and resume decisions are recorded on it.
 
     Each sink write retries transient failures with exporterhelper's
     deterministic backoff (round 4: initial × multiplier^n capped at max —
     the same schedule as plans/sinks.retry_write); exhaustion re-raises,
     leaving the sink UNCOMMITTED in the manifest so the next run resumes
-    exactly there — the manifest IS the persistent sending queue.
-    ``sleep``/``writer`` are injectable for tests.
-    """
-    from pyspark.sql import functions as F
+    exactly there — the manifest IS the persistent sending queue. Every
+    attempt observes a fresh counter: an Observation binds to one plan and
+    reports only its first action, and a failed action also completes it
+    (with the rows seen before the failure).
 
+    ``sleep``/``writer`` are injectable for tests. ``writer(frame, path)``
+    must write the frame it is handed, in full, with one action over it:
+    the count is read after the writer returns and waits for that action.
+    """
     do_sleep = sleep if sleep is not None else time.sleep
     do_write = writer or (lambda frame, p: frame.write.mode("overwrite").parquet(p))
     manifest = LineageManifest(manifest_path or os.path.join(base_path, "_lineage.json"))
@@ -123,8 +131,9 @@ def write_sinks_resumable(
         t0 = time.time()
         interval = backoff_initial_s
         for attempt in range(max_retries + 1):
+            observed, obs = observe_rows(out)
             try:
-                do_write(out, path)
+                do_write(observed, path)
                 if metrics is not None and attempt:
                     metrics.stages[f"sink:{name}:attempts"] = attempt + 1
                 break
@@ -133,18 +142,11 @@ def write_sinks_resumable(
                     raise  # uncommitted in manifest -> next run resumes here
                 do_sleep(interval)
                 interval = min(interval * backoff_multiplier, backoff_max_s)
-        # count from the WRITTEN files (footer-level scan of the output),
-        # not by re-running the upstream plan — a non-persisted caller would
-        # otherwise pay parse+enrich+route a second time per sink. The
-        # lineage cell unit becomes the output file, which is what resume
-        # actually protects.
-        back = out.sparkSession.read.parquet(path)
-        rows_per_file = back.groupBy(F.col("_metadata.file_path").alias("_f")).count().collect()
-        part_rows = [r["count"] for r in sorted(rows_per_file, key=lambda r: r["_f"])]
-        manifest.record_sink(run_id, name, part_rows)
+        rows = obs.get["rows"]
+        manifest.record_sink(run_id, name, rows)
         if metrics is not None:
             metrics.stages[f"sink:{name}"] = round(time.time() - t0, 3)
-            metrics.record_sink(name, sum(part_rows))
+            metrics.record_sink(name, rows)
         written[name] = path
     return written
 

@@ -18,7 +18,6 @@ Plan shape at scale (the 100 TB story):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +28,7 @@ from ..operators import aggregate as agg_ops
 from ..operators.enrich import enrich_transcripts
 from ..operators.order import stable_order
 from ..operators.parse import parse_native, parse_vectorized
-from ..operators.route import FIXTURE_ROUTES, RouteTable, apply_routes, sink_frames
+from ..operators.route import FIXTURE_ROUTES, RouteTable, apply_routes
 
 
 def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,37 +83,3 @@ def pipeline_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
     )
     return {"agg_per_conv": per_conv, "agg_per_tool": per_tool}
 
-
-def run_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str | None = None,
-    cfg: PipelineConfig | None = None,
-) -> dict[str, int]:
-    """End-to-end run incl. sink writes; returns per-sink row counts (the
-    testbed sent==received correctness gate, testbed/testbed/validator.go:68)."""
-    cfg = cfg or PipelineConfig()
-    routed = build_routed(spark, sf_dir, cfg).persist()
-    try:
-        counts: dict[str, int] = {}
-        sinks = sink_frames(routed, cfg.routes)
-        for name, sdf in sinks.items():
-            if out_dir:
-                sdf.drop(*[c for c in sdf.columns if c.startswith("copy_")]).write.mode("overwrite").parquet(
-                    os.path.join(out_dir, name)
-                )
-                counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
-            else:
-                counts[name] = sdf.count()
-        for name, adf in pipeline_aggregates(routed).items():
-            if out_dir:
-                adf.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-                # count what LANDED, like the sink path above: validates
-                # the write and avoids re-running the whole aggregation a
-                # second time just to count it (round-5 review)
-                counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
-            else:
-                counts[name] = adf.count()
-        return counts
-    finally:
-        routed.unpersist()

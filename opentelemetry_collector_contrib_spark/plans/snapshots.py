@@ -20,7 +20,7 @@ Semantics implemented (and tested):
     against is still current at publish time (compare-and-swap via atomic
     rename + re-read), raising CommitConflict for the loser.
 
-This deepens plans/lineage.py (the per-partition resume manifest): lineage
+This deepens plans/lineage.py (the per-sink resume manifest): lineage
 answers "which sink cells are durably written" for idempotent reruns;
 this answers "what did the table look like at commit X".
 """

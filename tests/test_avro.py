@@ -1,11 +1,18 @@
-"""Avro binary decode (operators/avro.py) — the reference's own test
-schema and expected native value (avrologencodingextension
+"""Avro binary decode (operators/avro.py) — the reference's test schema
+and expected native value (avrologencodingextension
 extension_test.go:24-37, testdata/schema1.avro) plus wire-level edge
-cases: negative block counts, null unions, malformed isolation."""
+cases: negative block counts, null unions, malformed isolation.
+
+The schema is read from ``tests/data/schema1.avro``, a committed copy of
+the package's documented transcription ``operators/avro.AVRO_LOG_SCHEMA``,
+not the reference's own file. These tests therefore no longer check that
+the package copy matches the reference bytes; they check the decoder
+against that schema."""
 
 from __future__ import annotations
 
 import json
+import os
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -20,9 +27,8 @@ from opentelemetry_collector_contrib_spark.operators.avro import (
     synthesize_avro_logs,
 )
 
-REF_SCHEMA = json.load(
-    open("/root/reference/extension/encoding/avrologencodingextension/testdata/schema1.avro")
-)
+with open(os.path.join(os.path.dirname(__file__), "data", "schema1.avro")) as _f:
+    REF_SCHEMA = json.load(_f)
 # the exact native value extension_test.go:37 asserts
 REF_VALUE = {
     "timestamp": 1697187201488000000,

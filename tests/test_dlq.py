@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.plans.dlq import (
@@ -142,12 +144,22 @@ def test_retry_write_ledger_makes_rerun_idempotent(spark, tmp_path):
 def test_resumable_sinks_retry_then_resume_on_exhaustion(spark, tmp_path):
     """write_sinks_resumable retries each sink with the exporterhelper
     backoff; exhaustion leaves the sink uncommitted so the NEXT run
-    resumes exactly there — the manifest is the persistent queue."""
+    resumes exactly there — the manifest is the persistent queue.
+
+    On the second run the flaky sink's first attempt starts writing the
+    frame it is handed and fails inside the write. A failed action
+    completes that attempt's row counter with the rows it saw (none here),
+    so the 2 rows recorded for the retried sink prove each attempt
+    observes a fresh counter."""
+    import uuid
+
     import pytest as _pytest
 
     from opentelemetry_collector_contrib_spark.plans.lineage import (
+        LineageManifest,
         write_sinks_resumable,
     )
+    from opentelemetry_collector_contrib_spark.plans.metrics import PipelineMetrics
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
     sinks = {"s_ok": df, "s_flaky": df}
@@ -159,6 +171,8 @@ def test_resumable_sinks_retry_then_resume_on_exhaustion(spark, tmp_path):
             calls["n"] += 1
             if calls["n"] <= 3:  # fails through max_retries=2 exhaustion
                 raise IOError("sink down")
+            if calls["n"] == 4:  # fails inside a write of the frame
+                frame = frame.withColumn("_down", F.raise_error(F.lit("sink down mid-write")))
         frame.write.mode("overwrite").parquet(path)
 
     base = str(tmp_path / "out")
@@ -168,8 +182,16 @@ def test_resumable_sinks_retry_then_resume_on_exhaustion(spark, tmp_path):
         )
     assert slept == [5.0, 7.5]  # deterministic schedule before exhaustion
     # second run: committed sink skipped, flaky sink retried and now succeeds
+    metrics = PipelineMetrics(run_id=uuid.uuid4().hex)
     res = write_sinks_resumable(
-        df, sinks, base, max_retries=2, sleep=slept.append, writer=flaky_writer
+        df, sinks, base, max_retries=2, sleep=slept.append, writer=flaky_writer,
+        metrics=metrics,
     )
     assert set(res) == {"s_ok", "s_flaky"}
+    assert slept == [5.0, 7.5, 5.0] and calls["n"] == 5
     assert spark.read.parquet(res["s_flaky"]).count() == 2
+    assert metrics.sink_rows == {"s_ok": 2, "s_flaky": 2}
+    assert metrics.resumed_sinks == ["s_ok"]
+    assert metrics.stages["sink:s_flaky:attempts"] == 2
+    cells = LineageManifest(os.path.join(base, "_lineage.json")).cells_for("s_flaky")
+    assert [(c.partition_id, c.row_count) for c in cells] == [(0, 2)]

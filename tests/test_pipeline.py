@@ -48,10 +48,14 @@ def test_sink_writes_and_lineage_resume(spark, routed_t1, tmp_path):
     total = routed_t1.count()
     assert counts1["errors"] + counts1["tool_events"] + counts1["general"] == total
 
-    # manifest recorded all sinks
+    # manifest recorded all sinks, one cell each, with the row count
+    # observed on the write equal to the rows that landed
     m = LineageManifest(os.path.join(base, "_lineage.json"))
     for s in ["errors", "tool_events", "general", "human_turns"]:
         assert m.is_committed(s)
+        cells = m.cells_for(s)
+        assert [c.partition_id for c in cells] == [0]
+        assert cells[0].row_count == counts1[s]
 
     # rerun: all sinks skipped (idempotent resume), data unchanged
     paths2 = write_sinks_resumable(routed_t1, sinks, base)
@@ -96,6 +100,27 @@ def test_metrics_recording(spark, routed_t1, tmp_path):
 
     path = m1.write(str(tmp_path / "out" / "_metrics.json"))
     assert json.load(open(path))["run_id"] == m1.run_id
+
+
+def test_stage_counts_match_filters(routed_t1):
+    """The stage counters from one aggregate equal the per-stage filters
+    counted one by one, and the move routes partition the input."""
+    from opentelemetry_collector_contrib_spark.plans.metrics import stage_counts
+
+    got = stage_counts(routed_t1, FIXTURE_ROUTES)
+    n = routed_t1.count()
+    want = {
+        "in": n,
+        "parse.unmatched": routed_t1.filter(F.col("pattern_id") == "raw").count(),
+        "enrich.tool_miss": routed_t1.filter(F.col("tool_category") == "Unknown").count(),
+        "copy.human_turns": routed_t1.filter(F.col("copy_human_turns")).count(),
+    }
+    for rid in ("errors", "tool_events", "general"):
+        want[f"route.{rid}"] = routed_t1.filter(F.col("route_id") == rid).count()
+    assert got == want
+    assert got["route.errors"] + got["route.tool_events"] + got["route.general"] == n
+    # a frame without the pipeline columns gets only the counters it can have
+    assert stage_counts(routed_t1.select("conv_id")) == {"in": n}
 
 
 def test_genai_normalize(spark, routed_t1):

@@ -84,8 +84,36 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     for route in ("errors", "tool_events"):
         assert route in first["sinks"], sorted(first["sinks"])
     assert first["metrics"]["input_rows"] > 0
+    # every count job.py prints is observed on the write; it must equal the
+    # rows that landed in the parquet
+    landed = {name: _parquet_rows(os.path.join(out, name)) for name in first["sinks"]}
+    assert first["sinks"] == landed
+    # the testbed validator's sent == received: the move sinks partition
+    # the input, and the stage counters agree with the sinks
+    sinks, stages = first["sinks"], first["metrics"]["stage_rows"]
+    assert sinks["errors"] + sinks["tool_events"] + sinks["general"] == first["metrics"]["input_rows"]
+    assert stages["in"] == first["metrics"]["input_rows"]
+    for route in ("errors", "tool_events", "general"):
+        assert stages[f"route.{route}"] == sinks[route]
+    assert stages["copy.human_turns"] == sinks["human_turns"]
+    assert 0 <= stages["parse.unmatched"] <= stages["in"]
+    assert 0 <= stages["enrich.tool_miss"] <= stages["in"]
 
     # idempotent resume: same --output, manifest marks sinks committed,
     # counts must not change (no duplicate rows appended)
     second = _run(cmd, str(workdir))
     assert second["sinks"] == first["sinks"]
+    assert second["metrics"]["stage_rows"] == first["metrics"]["stage_rows"]
+    assert sorted(second["metrics"]["resumed_sinks"]) == sorted(
+        ("errors", "tool_events", "general", "human_turns")
+    )
+
+
+def _parquet_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )

@@ -6,6 +6,7 @@ collectd.go naming rules, receiver.go:75-89 envelope."""
 from __future__ import annotations
 
 import base64
+import os
 
 from pyspark.sql import functions as F
 
@@ -14,6 +15,8 @@ from opentelemetry_collector_contrib_spark.operators.parse import (
     parse_collectd_json,
     parse_firehose_envelope,
 )
+
+DATA_DIR = os.path.join(os.path.dirname(__file__), "data")
 
 
 def _carbon(spark, *lines):
@@ -164,14 +167,16 @@ def test_vpc_flow_defaults_and_unset_markers(spark):
 
 
 def test_alb_access_log_reference_fixture(spark):
-    """Parse the reference's own alb_al_valid_logs.log fixture lines
-    (elb-access-log/testdata) — including the IPv6 client and the
-    3-extra-trailing-fields variant newer ALB versions append."""
+    """Parse ALB access-log lines in the shape of the reference's
+    alb_al_valid_logs.log fixture (elb-access-log/testdata) — including the
+    IPv6 client and the 3-extra-trailing-fields variant newer ALB versions
+    append. The lines in tests/data/alb_access_log.log are written from the
+    AWS ALB access-log format documentation (its HTTPS example entry); they
+    are not the reference's own bytes."""
     from opentelemetry_collector_contrib_spark.operators.parse import parse_alb_access_log
 
-    path = ("/root/reference/extension/encoding/awslogsencodingextension/internal/"
-            "unmarshaler/elb-access-log/testdata/alb_al_valid_logs.log")
-    lines = [(ln,) for ln in open(path).read().splitlines()]
+    with open(os.path.join(DATA_DIR, "alb_access_log.log")) as f:
+        lines = [(ln,) for ln in f.read().splitlines()]
     lines.append(("http 2023-04-01T12:00:00Z alb",))  # alb_al_insufficient_fields.log
     df = spark.createDataFrame(lines, "body string")
     rows = parse_alb_access_log(df, "body").collect()
@@ -215,11 +220,15 @@ def test_cloudtrail_records_parse(spark):
 
 
 def test_s3_access_log_reference_fixture(spark):
+    """Parse S3 server access-log lines in the shape of the reference's
+    valid_s3_access_log.log fixture (s3-access-log/testdata). The lines in
+    tests/data/s3_access_log.log are written from the example log in the
+    AWS S3 server access-log format documentation; they are not the
+    reference's own bytes."""
     from opentelemetry_collector_contrib_spark.operators.parse import parse_s3_access_log
 
-    path = ("/root/reference/extension/encoding/awslogsencodingextension/internal/"
-            "unmarshaler/s3-access-log/testdata/valid_s3_access_log.log")
-    lines = [(ln,) for ln in open(path).read().splitlines() if ln.strip()]
+    with open(os.path.join(DATA_DIR, "s3_access_log.log")) as f:
+        lines = [(ln,) for ln in f.read().splitlines() if ln.strip()]
     lines.append(("too short line",))
     df = spark.createDataFrame(lines, "body string")
     rows = parse_s3_access_log(df, "body").collect()
