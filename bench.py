@@ -255,14 +255,11 @@ def main() -> None:
     # as a LogsData payload (cached spool, generated untimed), then decoded
     # and fully materialized. records/s = n_rows / q14 seconds.
     def wire_decode():
-        # auto-probes spark-protobuf: JVM from_protobuf when the jar is
-        # present (A/B hook for jar-bearing environments), the honest
-        # Arrow-batched Python walk otherwise (this image)
         from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-            parse_otlp_pb_logs_auto,
+            parse_otlp_pb_logs,
         )
 
-        return force(parse_otlp_pb_logs_auto(spark.read.parquet(wire_spool), "payload"))
+        return force(parse_otlp_pb_logs(spark.read.parquet(wire_spool), "payload"))
 
     if selected is None or "q14_otlp_pb_decode" in selected:
         from opentelemetry_collector_contrib_spark.fixtures import tier_for_sf_dir
@@ -570,12 +567,6 @@ def main() -> None:
                 lambda _k, v: v.isNotNull(),
             ).alias("labels")
         )
-        # engine choice measured both ways (BENCH/AB_r5.md): the round-5
-        # two-phase auto path is 1.35x WHEN the label map is materialized
-        # (persisted / scanned — the production shape), but ~0.75x on
-        # THIS query, whose map is an in-plan synthetic expression — the
-        # phase boundary rebuilds map->entries->map in interpreted HOF
-        # land. q26 therefore stays on the entries engine.
         q26 = relabel(labeled, _RELABEL_RULES).select(labels_csv(F.col("labels")).alias("l"))
         timed("q26_prom_relabel", lambda: force(q26))
 

@@ -36,6 +36,8 @@ semantics above, so the unrolled SQL oracle is unchanged.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -105,13 +107,21 @@ def bpe_train(
     statistically indistinguishable for any realistic ``k_merges`` (rare
     tail words cannot win a pair-count argmax). Pass ``max_words=None``
     explicitly to collect the full dictionary (small-corpus exactness,
-    e.g. the DuckDB parity oracle)."""
+    e.g. the DuckDB parity oracle). When the cap truncates the dictionary
+    a ``UserWarning`` names it: the same collect fetches one row past the
+    cap, so detecting truncation costs no extra job."""
     wd = word_dict(df, text_col, lowercase).select("word", "freq")
     if max_words is not None:
-        wd = wd.orderBy(F.col("freq").desc(), F.col("word").asc()).limit(max_words)
-    words: list[tuple[list[str], int]] = [
-        (list(r["word"]), r["freq"]) for r in wd.collect()
-    ]
+        wd = wd.orderBy(F.col("freq").desc(), F.col("word").asc()).limit(max_words + 1)
+    rows = wd.collect()
+    if max_words is not None and len(rows) > max_words:
+        rows = rows[:max_words]
+        warnings.warn(
+            f"bpe_train: the word dictionary exceeds max_words={max_words}; "
+            f"merges are learned from the top {max_words} words by frequency",
+            stacklevel=2,
+        )
+    words: list[tuple[list[str], int]] = [(list(r["word"]), r["freq"]) for r in rows]
 
     from collections import defaultdict
 

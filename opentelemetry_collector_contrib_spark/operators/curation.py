@@ -1451,7 +1451,12 @@ def ccnet_buckets(
       sample, not a full-corpus sort.
 
     Unscoreable docs (<2 tokens → NULL score) land in 'tail' on both
-    paths. Output adds score_col and bucket_col.
+    paths. On the exact path they are forced to 'tail' but still take up
+    ntile(3) slots: NULLS LAST keeps them at the end of the language's
+    window, so the thirds are thirds of ALL the language's docs, not of
+    its scored docs — in a NULL-heavy language fewer scored docs reach
+    'head'/'middle' than a tiling of scored docs alone would give. The
+    SQL oracle tiles the same way. Output adds score_col and bucket_col.
     """
     scored = lm_quality_score(df, id_col=id_col, text_col=text_col, n_buckets=n_buckets)
     if thresholds is None:

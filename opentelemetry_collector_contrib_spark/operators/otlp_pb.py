@@ -231,219 +231,6 @@ def parse_otlp_pb_logs(df: DataFrame, source: str = "payload") -> DataFrame:
     return _pb_map(df, source, _OL_FIELDS, decode_logs_data)
 
 
-# --- optional JVM decode seam (spark-protobuf), round 5 ----------------------
-#
-# The reference's receivers decode OTLP in native code; our honest
-# Arrow-batched Python walk is the fallback, but when an environment ships
-# the OPTIONAL spark-protobuf module (absent from this image — probe result
-# PROTOBUF_NOT_LOADED, BENCH/SESSION_r4.md), `from_protobuf()` decodes
-# JVM-side inside whole-stage codegen. The descriptor set is HAND-ENCODED
-# with the same wire writers the fixture encoders use (descriptor.proto is
-# itself protobuf), so building it needs no protobuf library; only USING it
-# needs the jar. A/B hook for a jar-bearing environment:
-#     SPARK_GRAFT_OTLP_ENGINE=jvm python bench.py   (q14 auto-probes anyway)
-
-_DESC_TYPE = {
-    "double": 1, "int64": 3, "int32": 5, "fixed64": 6, "fixed32": 7,
-    "bool": 8, "string": 9, "message": 11, "bytes": 12,
-}
-_OTLP_PKG = "opentelemetry.proto.logs.v1"
-
-
-def _desc_field(
-    name: str, number: int, ftype: str, *, repeated: bool = False,
-    type_name: str | None = None,
-) -> bytes:
-    """FieldDescriptorProto bytes: name=1, number=3, label=4, type=5,
-    type_name=6 (fully qualified, leading dot)."""
-    out = _ld(1, name.encode())
-    out += _tag(3, 0) + _enc_varint(number)
-    out += _tag(4, 0) + _enc_varint(3 if repeated else 1)  # REPEATED / OPTIONAL
-    out += _tag(5, 0) + _enc_varint(_DESC_TYPE[ftype])
-    if type_name is not None:
-        out += _ld(6, ("." + _OTLP_PKG + "." + type_name).encode())
-    return out
-
-
-def _desc_message(name: str, fields: list[bytes]) -> bytes:
-    """DescriptorProto bytes: name=1, field=2 (repeated)."""
-    return _ld(1, name.encode()) + b"".join(_ld(2, f) for f in fields)
-
-
-def logs_descriptor_set() -> bytes:
-    """FileDescriptorSet bytes for the LogsData subset this module walks
-    (field numbers from the public opentelemetry-proto logs.proto /
-    common.proto — see module docstring). AnyValue's recursive
-    array_value/kvlist_value arms are OMITTED so the schema is
-    non-recursive (spark-protobuf rejects recursion unless
-    recursive.fields.max.depth is set); unknown fields skip on decode per
-    the proto contract, so payloads carrying them still parse — their
-    bodies render NULL on the JVM path (the Python walk renders them;
-    scalar bodies agree on both paths)."""
-    M, Fd = _desc_message, _desc_field
-    msgs = [
-        M("LogsData", [Fd("resource_logs", 1, "message", repeated=True, type_name="ResourceLogs")]),
-        M("ResourceLogs", [
-            Fd("resource", 1, "message", type_name="Resource"),
-            Fd("scope_logs", 2, "message", repeated=True, type_name="ScopeLogs"),
-            Fd("schema_url", 3, "string"),
-        ]),
-        M("Resource", [Fd("attributes", 1, "message", repeated=True, type_name="KeyValue")]),
-        M("ScopeLogs", [
-            Fd("scope", 1, "message", type_name="InstrumentationScope"),
-            Fd("log_records", 2, "message", repeated=True, type_name="LogRecord"),
-        ]),
-        M("InstrumentationScope", [Fd("name", 1, "string"), Fd("version", 2, "string")]),
-        M("LogRecord", [
-            Fd("time_unix_nano", 1, "fixed64"),
-            Fd("severity_number", 2, "int32"),
-            Fd("severity_text", 3, "string"),
-            Fd("body", 5, "message", type_name="AnyValue"),
-            Fd("attributes", 6, "message", repeated=True, type_name="KeyValue"),
-            Fd("flags", 8, "fixed32"),
-            Fd("trace_id", 9, "bytes"),
-            Fd("span_id", 10, "bytes"),
-            Fd("observed_time_unix_nano", 11, "fixed64"),
-        ]),
-        M("KeyValue", [Fd("key", 1, "string"), Fd("value", 2, "message", type_name="AnyValue")]),
-        M("AnyValue", [
-            Fd("string_value", 1, "string"),
-            Fd("bool_value", 2, "bool"),
-            Fd("int_value", 3, "int64"),
-            Fd("double_value", 4, "double"),
-            Fd("bytes_value", 7, "bytes"),
-        ]),
-    ]
-    fdp = (
-        _ld(1, b"otlp_logs_subset.proto")
-        + _ld(2, _OTLP_PKG.encode())
-        + b"".join(_ld(4, m) for m in msgs)
-        + _ld(12, b"proto3")
-    )
-    return _ld(1, fdp)
-
-
-def jvm_protobuf_available(spark) -> bool:
-    """True iff the optional spark-protobuf module is on the session
-    classpath. Resolves through Spark's Utils.classForName first —
-    jars delivered via ``--packages``/``spark.jars`` land on Spark's
-    MutableURLClassLoader, which plain ``Class.forName`` (system
-    classloader) cannot see, so the naive probe would false-negative in
-    exactly the environments the seam exists for (round-5 review).
-    Any resolution failure means the honest Python walk runs instead."""
-    cls = "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
-    try:
-        # (className, initialize, noSparkClassLoader) — uses the context-
-        # or-Spark classloader, the one session jars are registered on
-        spark._jvm.org.apache.spark.util.Utils.classForName(cls, True, False)
-        return True
-    except Exception:  # noqa: BLE001 — Py4J wraps ClassNotFoundException
-        pass
-    try:
-        spark._jvm.java.lang.Class.forName(cls)
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def _render_any_col(v):
-    """Spark rendering of a decoded AnyValue struct, mirroring _render for
-    the scalar arms (string as-is, bool true/false, int/double cast,
-    bytes lower-hex). Absent proto3 scalars arrive as NULL
-    (spark-protobuf's default emit.default.values=false), so coalesce
-    picks the set arm exactly like the oneof walk."""
-    return F.coalesce(
-        v["string_value"],
-        F.when(v["bool_value"].isNotNull(),
-               F.when(v["bool_value"], F.lit("true")).otherwise(F.lit("false"))),
-        v["int_value"].cast("string"),
-        v["double_value"].cast("string"),
-        F.lower(F.hex(v["bytes_value"])),
-    )
-
-
-def _attrs_csv_col(attrs):
-    """Sorted k=render(v) CSV of a repeated-KeyValue column (NULL render
-    → empty string, empty list → NULL), matching _attrs_csv."""
-    rendered = F.transform(
-        attrs,
-        lambda kv: F.concat(kv["key"], F.lit("="), F.coalesce(_render_any_col(kv["value"]), F.lit(""))),
-    )
-    joined = F.array_join(F.array_sort(rendered), ",")
-    return F.when(F.size(attrs) > 0, joined)
-
-
-def parse_otlp_pb_logs_jvm(df: DataFrame, source: str = "payload") -> DataFrame:
-    """JVM-side LogsData decode via spark-protobuf: same output SCHEMA as
-    parse_otlp_pb_logs (one row per LogRecord, resource and scope
-    flattened, malformed payloads dropped via PERMISSIVE-null).
-
-    Known value-rendering divergences from the Python walk (round-5
-    review — both are rare on real payloads but hash-relevant):
-      - AnyValue doubles render via Spark's double→string cast (Java
-        ``Double.toString``: scientific notation at \|x\| ≥ 1e7 / < 1e-3)
-        while the walk uses Python ``repr`` — e.g. 12345678.5 renders
-        '1.23456785E7' here vs '12345678.5' there;
-      - a serializer that EXPLICITLY emits a default-valued oneof arm
-        (``string_value:""``, ``bool_value:false``, ``int_value:0``)
-        decodes to NULL here (no oneof presence in the hand descriptor +
-        emit.default.values=false) but renders ''/'false'/'0' in the walk.
-    String/str-int bodies and attrs — the shapes the fixtures and the
-    parity oracle exercise — agree exactly. Requires
-    jvm_protobuf_available(); use parse_otlp_pb_logs_auto for the
-    probe-gated dispatch."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    msg = from_protobuf(
-        F.col(source),
-        _OTLP_PKG + ".LogsData",
-        binaryDescriptorSet=logs_descriptor_set(),
-        options={"mode": "PERMISSIVE"},
-    )
-    rl = (
-        df.withColumn("_m", msg)
-        .filter(F.col("_m").isNotNull())
-        .select(F.explode("_m.resource_logs").alias("_rl"))
-    )
-    sl = rl.select(
-        _attrs_csv_col(F.col("_rl.resource.attributes")).alias("ol_resource_csv"),
-        F.explode("_rl.scope_logs").alias("_sl"),
-    )
-    lr = sl.select(
-        "ol_resource_csv",
-        F.col("_sl.scope.name").alias("ol_scope"),
-        F.explode("_sl.log_records").alias("_lr"),
-    )
-    r = F.col("_lr")
-    return lr.select(
-        # integral div: ns values (~1.8e18) exceed double's 2^53 mantissa,
-        # so float division would corrupt the microsecond timestamp
-        F.try_divide(r["time_unix_nano"].cast("decimal(20,0)"), F.lit(1000))
-        .cast("long")
-        .alias("ol_ts_us"),
-        F.nullif(r["severity_number"], F.lit(0)).cast("int").alias("ol_severity_number"),
-        F.nullif(r["severity_text"], F.lit("")).alias("ol_severity_text"),
-        _render_any_col(r["body"]).alias("ol_body"),
-        _attrs_csv_col(r["attributes"]).alias("ol_attrs_csv"),
-        F.lower(F.hex(r["trace_id"])).alias("ol_trace_id"),
-        F.lower(F.hex(r["span_id"])).alias("ol_span_id"),
-        "ol_scope",
-        "ol_resource_csv",
-    ).select([f.name for f in _OL_FIELDS])
-
-
-def parse_otlp_pb_logs_auto(df: DataFrame, source: str = "payload") -> DataFrame:
-    """Probe-gated dispatch: spark-protobuf JVM decode when the jar is
-    present, the Arrow-batched Python walk otherwise. Output schema is
-    identical either way; see parse_otlp_pb_logs_jvm for the two
-    documented value-rendering caveats (double formatting, explicitly
-    serialized default oneof arms) a jar-bearing environment should
-    pin with its own golden run before switching hashes over."""
-    if jvm_protobuf_available(df.sparkSession):
-        return parse_otlp_pb_logs_jvm(df, source)
-    return parse_otlp_pb_logs(df, source)
-
-
 # --- encode side (fixtures/tests only) ---------------------------------------
 
 

@@ -7,6 +7,7 @@ left-to-right sweep, repeat. The distributed trainer must learn the same
 merge list and produce the same tokenization.
 """
 
+import warnings
 from collections import Counter
 
 import pytest
@@ -177,5 +178,26 @@ def test_bpe_train_k256_matches_reference(spark):
 def test_bpe_train_max_words_bounds_collect(spark):
     df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
     full = bpe_train(df, 3)
-    capped = bpe_train(df, 3, max_words=3)  # top-3 words by freq only
+    with pytest.warns(UserWarning, match="max_words=3"):
+        capped = bpe_train(df, 3, max_words=3)  # top-3 words by freq only
     assert len(capped) == 3 and capped != full  # trained, but on the capped dict
+
+
+def test_bpe_train_warns_only_when_max_words_truncates(spark):
+    """A 3-word dictionary capped at 2 warns, naming the cap, and learns
+    exactly the merges of the top-2 words by frequency; no cap, or a cap
+    at or above the word count, trains silently on every word."""
+    texts = ["aab aab aab", "abb abb", "cd"]  # aab:3, abb:2, cd:1
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    with pytest.warns(UserWarning, match="max_words=2"):
+        capped = bpe_train(df, 3, max_words=2)
+    ref_top2, _ = _ref_train(["aab aab aab", "abb abb"], 3)
+    assert [(m["left"], m["right"], m["pair_count"]) for m in capped] == ref_top2
+
+    ref_all, _ = _ref_train(texts, 3)
+    for cap in (None, 3, 10):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            merges = bpe_train(df, 3, max_words=cap)
+        assert not [w for w in caught if "max_words" in str(w.message)], cap
+        assert [(m["left"], m["right"], m["pair_count"]) for m in merges] == ref_all, cap

@@ -353,97 +353,3 @@ def test_skywalking_segment_negative_parent_and_enums():
     assert child["sw_peer"] == "db:3306" and child["sw_type"] == "Exit"
     assert child["sw_layer"] == "Database" and not child["sw_is_error"]
     assert all(r["sw_service"] == "svc" and r["sw_trace_id"] == "t" * 32 for r in rows)
-
-
-# --- round 5: spark-protobuf JVM seam ---------------------------------------
-
-
-def test_jvm_probe_and_auto_fallback(spark):
-    """In this image the spark-protobuf jar is absent (probe result
-    PROTOBUF_NOT_LOADED, BENCH/SESSION_r4.md): the probe must say so and
-    parse_otlp_pb_logs_auto must produce the Python walk's rows exactly.
-    In a jar-bearing environment the same test exercises the JVM branch
-    against the walk instead — the documented A/B hook."""
-    from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-        jvm_protobuf_available,
-        parse_otlp_pb_logs_auto,
-        parse_otlp_pb_logs_jvm,
-    )
-
-    df = spark.range(40).select(
-        F.col("id").alias("event_id"),
-        F.concat(F.lit("body-"), F.col("id")).alias("text"),
-    )
-    pay = synthesize_otlp_pb(df)
-    walk = sorted(tuple(r) for r in parse_otlp_pb_logs(pay, "payload").collect())
-    auto = sorted(tuple(r) for r in parse_otlp_pb_logs_auto(pay, "payload").collect())
-    assert auto == walk and len(walk) > 0
-    if jvm_protobuf_available(spark):
-        jvm = sorted(tuple(r) for r in parse_otlp_pb_logs_jvm(pay, "payload").collect())
-        assert jvm == walk
-
-
-def test_logs_descriptor_set_structure_roundtrip():
-    """The hand-encoded FileDescriptorSet must be structurally sound: our
-    own wire reader walks it back and the message/field inventory must
-    match the field numbers decode_logs_data dispatches on — a schema
-    drift between the two decode paths fails here, without needing the
-    jar."""
-    from opentelemetry_collector_contrib_spark.operators.otlp_pb import (
-        _fields,
-        logs_descriptor_set,
-    )
-
-    (f_set,) = [v for f, _, v in _fields(logs_descriptor_set()) if f == 1]
-    name = pkg = syntax = None
-    messages = {}
-    for f, _, v in _fields(bytes(f_set)):
-        if f == 1:
-            name = bytes(v).decode()
-        elif f == 2:
-            pkg = bytes(v).decode()
-        elif f == 12:
-            syntax = bytes(v).decode()
-        elif f == 4:
-            mname, fields = None, {}
-            for f2, _, v2 in _fields(bytes(v)):
-                if f2 == 1:
-                    mname = bytes(v2).decode()
-                elif f2 == 2:
-                    fname = num = ftype = tname = None
-                    rep = False
-                    for f3, _, v3 in _fields(bytes(v2)):
-                        if f3 == 1:
-                            fname = bytes(v3).decode()
-                        elif f3 == 3:
-                            num = v3
-                        elif f3 == 4:
-                            rep = v3 == 3
-                        elif f3 == 5:
-                            ftype = v3
-                        elif f3 == 6:
-                            tname = bytes(v3).decode()
-                    fields[fname] = (num, ftype, rep, tname)
-            messages[mname] = fields
-    assert (name, pkg, syntax) == ("otlp_logs_subset.proto", "opentelemetry.proto.logs.v1", "proto3")
-    lr = messages["LogRecord"]
-    # the exact field numbers the Python walk dispatches on
-    assert lr["time_unix_nano"][0:2] == (1, 6)   # fixed64
-    assert lr["severity_number"][0:2] == (2, 5)  # int32
-    assert lr["severity_text"][0:2] == (3, 9)    # string
-    assert lr["body"][:2] == (5, 11) and lr["body"][3].endswith(".AnyValue")
-    assert lr["attributes"][:3] == (6, 11, True)
-    assert lr["trace_id"][0:2] == (9, 12) and lr["span_id"][0:2] == (10, 12)
-    assert messages["LogsData"]["resource_logs"][:3] == (1, 11, True)
-    assert messages["KeyValue"]["value"][3].endswith(".AnyValue")
-    av = messages["AnyValue"]
-    assert {k: v[0] for k, v in av.items()} == {
-        "string_value": 1, "bool_value": 2, "int_value": 3,
-        "double_value": 4, "bytes_value": 7,
-    }
-    # every message reference resolves inside the file (no dependencies)
-    declared = {f".{pkg}.{m}" for m in messages}
-    for m, fs in messages.items():
-        for fname, (num, ftype, rep, tname) in fs.items():
-            if ftype == 11:
-                assert tname in declared, (m, fname, tname)

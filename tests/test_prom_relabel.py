@@ -9,6 +9,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators.prom_relabel import labels_csv, relabel
+from prom_relabel_ref import ordered_labels, reference_labels
 
 
 def _df(spark, rows):
@@ -257,36 +258,15 @@ def test_merge_scrape_labels_honor_modes(spark):
 
 
 def test_entries_engine_equals_map_engine_full_matrix(spark):
-    """Round-4 entries-array engine: byte-identical results to the map
-    engine across all nine actions chained, including label order."""
+    """All nine actions chained (the registry's q26 chain): the one engine
+    equals the pure-Python reference interpreter on every row, label
+    values AND label order included."""
     from opentelemetry_collector_contrib_spark.registry.telemetry import _RELABEL_RULES
 
-    h = F.xxhash64("id")
-    df = spark.range(2000).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("__address__"), F.concat(F.lit("10.0."), F.pmod(h, F.lit(200)).cast("string"), F.lit(":9100")),
-                F.lit("__scheme__"), F.when(h % 2 == 0, F.lit("http")).otherwise(F.lit("https")),
-                F.lit("__meta_kubernetes_namespace"), F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string")),
-                F.lit("__meta_kubernetes_pod_name"), F.concat(F.lit("pod-"), F.pmod(h, F.lit(7)).cast("string")),
-                F.lit("__meta_kubernetes_pod_label_App"),
-                F.when(h % 3 != 0, F.concat(F.lit("Web"), F.pmod(h, F.lit(4)).cast("string"))),
-                F.lit("instance"), F.when(h % 11 == 0, F.lit("i")),
-                F.lit("job"), F.lit("scrape"),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    )
-    m = {
-        r["id"]: list(r["labels"].items())  # order-sensitive compare
-        for r in relabel(df, _RELABEL_RULES, engine="map").collect()
-    }
-    e = {
-        r["id"]: list(r["labels"].items())
-        for r in relabel(df, _RELABEL_RULES, engine="entries").collect()
-    }
-    assert m == e and len(m) > 0
+    df = _label_fixture(spark).persist()
+    got = ordered_labels(relabel(df, _RELABEL_RULES))
+    assert got == reference_labels(ordered_labels(df), _RELABEL_RULES) and len(got) > 0
+    df.unpersist()
 
 
 _STATIC_RULES = [
@@ -323,45 +303,10 @@ def _label_fixture(spark, n=2000):
 
 
 def test_columnar_engine_value_equals_entries_on_static_chain(spark):
-    """The codegen fast path for static chains: identical label VALUES to
-    the dynamic engines (order is canonical-sorted, Prometheus's own
-    labels.Labels invariant)."""
-    df = _label_fixture(spark)
-    e = {r["id"]: dict(r["labels"]) for r in relabel(df, _STATIC_RULES, engine="entries").collect()}
-    c = {r["id"]: dict(r["labels"]) for r in relabel(df, _STATIC_RULES, engine="columnar").collect()}
-    assert e == c and len(e) > 0
-
-
-def test_columnar_engine_rejects_dynamic_chains(spark):
-    import pytest
-
-    df = _label_fixture(spark, 5)
-    with pytest.raises(ValueError, match="columnar engine"):
-        relabel(df, [{"action": "labelmap", "regex": "(.+)"}], engine="columnar")
-    with pytest.raises(ValueError, match="literal target_label"):
-        relabel(df, [{"action": "replace", "source_labels": ["job"],
-                      "regex": "(.+)", "target_label": "x_$1"}], engine="columnar")
-
-
-def test_columnar_engine_hot_path_is_codegen(spark):
-    """Per-rule work must be plain column expressions: the only
-    higher-order functions allowed are the single extract/reassemble pair
-    at the chain boundaries."""
-    df = _label_fixture(spark, 10)
-    out = relabel(df, _STATIC_RULES, engine="columnar")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # boundary ops only: one map_entries-based filter + one map_from_entries
-    assert plan.count("map_from_entries") <= 2
-
-
-def test_auto_engine_picks_columnar_when_eligible(spark):
-    df = _label_fixture(spark, 300)
-    # static chain -> columnar plan (no per-rule HOFs beyond the boundary pair)
-    static_plan = relabel(df, _STATIC_RULES, engine="auto")._jdf.queryExecution().executedPlan().toString()
-    assert static_plan.count("map_from_entries") <= 2
-    # dynamic chain (labelmap) -> entries engine, same values as explicit
-    dyn = [{"action": "labelmap", "regex": "__meta_kubernetes_(.+)", "replacement": "k8s_$1"}]
-    a = {r["id"]: dict(r["labels"]) for r in relabel(df, dyn, engine="auto").collect()}
-    e = {r["id"]: dict(r["labels"]) for r in relabel(df, dyn, engine="entries").collect()}
-    assert a == e
+    """The static subset of the main chain (every rule names its labels
+    up front — the registry's ``prom_relabel_columnar`` shape) equals the
+    reference interpreter, label order included."""
+    df = _label_fixture(spark).persist()
+    got = ordered_labels(relabel(df, _STATIC_RULES))
+    assert got == reference_labels(ordered_labels(df), _STATIC_RULES) and len(got) > 0
+    df.unpersist()

@@ -1,16 +1,20 @@
 """Property tests for the relabel engine: adversarial label values
 (regex metacharacters, separators embedded in values, unicode), the
-keep/drop partition invariant, and hashmod range/agreement."""
+keep/drop partition invariant, hashmod range/agreement, and agreement
+with the pure-Python reference interpreter (``prom_relabel_ref``) on
+random rule chains."""
 
 from __future__ import annotations
 
 import hashlib
+import random as _random
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators.prom_relabel import relabel
+from prom_relabel_ref import ordered_labels, reference_labels
 
 _VALUES = st.text(
     alphabet=st.sampled_from(list("abcXYZ019 .*+?()[]{}|\\^$;/=é中\n")), max_size=12
@@ -111,16 +115,13 @@ def test_default_regex_rejects_line_terminators(spark):
         ("(.+)", lambda v: v != "" and not any(c in v for c in "\n\r  ")),
     ]:
         expect_keep = {i for i, v in enumerate(vals) if matches(v)}
-        for engine in ("map", "entries", "columnar"):
-            kept = {
-                r["id"]
-                for r in relabel(
-                    df,
-                    [{"action": "keep", "source_labels": ["job"], "regex": regex}],
-                    engine=engine,
-                ).collect()
-            }
-            assert kept == expect_keep, (regex, engine)
+        kept = {
+            r["id"]
+            for r in relabel(
+                df, [{"action": "keep", "source_labels": ["job"], "regex": regex}]
+            ).collect()
+        }
+        assert kept == expect_keep, regex
         # replace with the default regex must be a no-op on non-matching rows
         out = {
             r["id"]: dict(r["labels"])
@@ -138,25 +139,21 @@ def test_default_regex_rejects_line_terminators(spark):
 
 
 def test_columnar_empty_touched_chain_is_pure_filter(spark):
-    """A chain that touches no label (source-less keep/drop) must compile
-    on every engine — the columnar engine used to build a zero-element
-    F.array() whose array<null> type crashed at plan time, which
-    engine='auto' (catching only ValueError) did not absorb."""
+    """A chain that touches no label (source-less keep/drop) is a pure
+    row filter: the joined source is "" on every row and the labels pass
+    through unchanged."""
     df = spark.createDataFrame(
         [(0, {"a": "x"}), (1, {"a": "y"})], "id int, labels map<string,string>"
     )
-    for engine in ("map", "entries", "columnar", "auto"):
-        # regex "" full-matches the joined empty source -> keep everything
-        out = relabel(df, [{"action": "keep", "regex": ""}], engine=engine)
-        rows = {r["id"]: dict(r["labels"]) for r in out.collect()}
-        assert rows == {0: {"a": "x"}, 1: {"a": "y"}}, engine
-        # regex "nope" matches nothing -> drop everything
-        assert relabel(df, [{"action": "keep", "regex": "nope"}], engine=engine).count() == 0
+    # regex "" full-matches the joined empty source -> keep everything
+    out = relabel(df, [{"action": "keep", "regex": ""}])
+    rows = {r["id"]: dict(r["labels"]) for r in out.collect()}
+    assert rows == {0: {"a": "x"}, 1: {"a": "y"}}
+    # regex "nope" matches nothing -> drop everything
+    assert relabel(df, [{"action": "keep", "regex": "nope"}]).count() == 0
 
 
-# --- round 4: engine equivalence under random rule chains --------------------
-
-import random as _random
+# --- equivalence with the reference interpreter under random rule chains ---
 
 
 def _random_rules(rng):
@@ -185,13 +182,9 @@ def _random_rules(rng):
     return rules
 
 
-def test_entries_engine_equals_map_engine_random_chains(spark):
-    """50 random rule chains over a mixed label fixture: the two engines
-    must agree exactly (values AND label order) on every chain."""
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import relabel
-
+def _mixed_fixture(spark, n):
     h = F.xxhash64("id")
-    df = spark.range(300).select(
+    return spark.range(n).select(
         F.col("id"),
         F.map_filter(
             F.create_map(
@@ -204,163 +197,65 @@ def test_entries_engine_equals_map_engine_random_chains(spark):
             lambda _k, v: v.isNotNull(),
         ).alias("labels"),
     ).persist()
+
+
+def _agrees_with_reference(df, inputs, rules):
+    """relabel == the pure-Python reference on every row: which rows
+    survive, label values and label order. ``inputs`` is
+    ``ordered_labels(df)``, collected once per frame."""
+    return ordered_labels(relabel(df, rules)) == reference_labels(inputs, rules)
+
+
+def test_entries_engine_equals_map_engine_random_chains(spark):
+    """50 random rule chains over a mixed label fixture: the engine must
+    agree exactly with the reference interpreter on every chain."""
+    df = _mixed_fixture(spark, 300)
+    inputs = ordered_labels(df)
     rng = _random.Random(424242)
     for trial in range(50):
         rules = _random_rules(rng)
-        m = {r["id"]: list(r["labels"].items())
-             for r in relabel(df, rules, engine="map").collect()}
-        e = {r["id"]: list(r["labels"].items())
-             for r in relabel(df, rules, engine="entries").collect()}
-        assert m == e, (trial, rules)
+        assert _agrees_with_reference(df, inputs, rules), (trial, rules)
     df.unpersist()
 
 
 def test_columnar_engine_joins_random_equivalence_when_eligible(spark):
-    """For every random chain the columnar engine can compile (static
-    label names only), its VALUES must equal the entries engine's."""
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import relabel
-
-    h = F.xxhash64("id")
-    df = spark.range(200).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("a"), F.concat(F.lit("web"), F.pmod(h, F.lit(4)).cast("string")),
-                F.lit("b"), F.when(h % 3 == 0, F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string"))),
-                F.lit("job"), F.lit("scrape"),
-                F.lit("__meta_x"), F.pmod(h, F.lit(6)).cast("string"),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    ).persist()
+    """Random chains restricted to the static subset (no labelmap /
+    labeldrop / labelkeep, no group refs in target names — the
+    registry's ``prom_relabel_columnar`` shape) agree with the reference
+    interpreter."""
+    df = _mixed_fixture(spark, 200)
+    inputs = ordered_labels(df)
     rng = _random.Random(777)
     tested = 0
     for _ in range(60):
         rules = _random_rules(rng)
-        eligible = all(
+        static = all(
             r["action"] not in ("labelmap", "labeldrop", "labelkeep")
             and "$" not in r.get("target_label", "")
             for r in rules
         )
-        if not eligible:
+        if not static:
             continue
         tested += 1
-        e = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="entries").collect()}
-        c = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="columnar").collect()}
-        assert e == c, rules
-    assert tested >= 5  # the generator must actually produce eligible chains
+        assert _agrees_with_reference(df, inputs, rules), rules
+    assert tested >= 5  # the generator must actually produce static chains
     df.unpersist()
-
-
-def test_auto_two_phase_mixed_chain_equals_entries(spark):
-    """Round-5 two-phase lowering: a mixed chain (static prefix + dynamic
-    labelmap/labeldrop suffix) under engine='auto' must produce exactly
-    the entries engine's label VALUES per row (order is canonical at the
-    phase boundary, by the columnar contract)."""
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import (
-        _static_prefix_len,
-    )
-    from opentelemetry_collector_contrib_spark.registry.telemetry import (
-        _RELABEL_RULES,
-    )
-
-    assert _static_prefix_len(_RELABEL_RULES) == 5  # q26's chain shape
-
-    h = F.xxhash64("id")
-    addr = F.concat(F.lit("10.0."), F.pmod(h, F.lit(200)).cast("string"),
-                    F.lit("."), F.pmod(h, F.lit(50)).cast("string"), F.lit(":9100"))
-    df = spark.range(400).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("__address__"), addr,
-                F.lit("__scheme__"), F.when(h % 2 == 0, F.lit("http")).otherwise(F.lit("https")),
-                F.lit("__meta_kubernetes_namespace"), F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string")),
-                F.lit("__meta_kubernetes_pod_name"), F.concat(F.lit("pod-"), F.pmod(h, F.lit(7)).cast("string")),
-                F.lit("__meta_kubernetes_pod_label_App"),
-                F.when(h % 3 != 0, F.concat(F.lit("Web"), F.pmod(h, F.lit(4)).cast("string"))),
-                F.lit("instance"), F.when(h % 11 == 0, addr),
-                F.lit("job"), F.lit("scrape"),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    ).persist()
-    e = {r["id"]: dict(r["labels"]) for r in relabel(df, _RELABEL_RULES, engine="entries").collect()}
-    a = {r["id"]: dict(r["labels"]) for r in relabel(df, _RELABEL_RULES, engine="auto").collect()}
-    assert a == e
-    # the kept/dropped row set must agree too (keep gate sits in the prefix)
-    assert set(a) == set(e) and 0 < len(a) < 400
-    df.unpersist()
-
-
-def test_auto_engine_random_chains_value_equivalence(spark):
-    """auto (whole-columnar / two-phase / entries, whichever compiles)
-    must agree with the entries engine on label VALUES for random mixed
-    chains — label order may differ (canonical at the columnar phase
-    boundary, by contract)."""
-    h = F.xxhash64("id")
-    df = spark.range(200).select(
-        F.col("id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("a"), F.concat(F.lit("web"), F.pmod(h, F.lit(4)).cast("string")),
-                F.lit("b"), F.when(h % 3 == 0, F.concat(F.lit("ns-"), F.pmod(h, F.lit(5)).cast("string"))),
-                F.lit("job"), F.lit("scrape"),
-                F.lit("__meta_x"), F.pmod(h, F.lit(6)).cast("string"),
-                F.lit("__tmp_y"), F.when(h % 2 == 0, F.lit("1/2")),
-            ),
-            lambda _k, v: v.isNotNull(),
-        ).alias("labels"),
-    ).persist()
-    rng = _random.Random(31337)
-    for trial in range(20):
-        rules = _random_rules(rng)
-        e = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="entries").collect()}
-        a = {r["id"]: dict(r["labels"]) for r in relabel(df, rules, engine="auto").collect()}
-        assert a == e, (trial, rules)
-    df.unpersist()
-
-
-def test_static_prefix_len_edges():
-    from opentelemetry_collector_contrib_spark.operators.prom_relabel import (
-        _static_prefix_len,
-    )
-
-    assert _static_prefix_len([]) == 0
-    # dynamic head -> no prefix -> auto degrades to entries wholesale
-    assert _static_prefix_len([{"action": "labelmap", "regex": "(.+)"}]) == 0
-    # group-ref target breaks the static run
-    assert _static_prefix_len(
-        [{"action": "keep", "regex": "x"},
-         {"action": "replace", "source_labels": ["a"], "target_label": "$1"},
-         {"action": "drop", "regex": "y"}]
-    ) == 1
-    # fully static chain -> whole length (auto would go whole-columnar first)
-    assert _static_prefix_len(
-        [{"action": "keep", "regex": "x"}, {"action": "hashmod", "source_labels": ["a"],
-         "modulus": 2, "target_label": "t"}]
-    ) == 2
 
 
 def test_labelmap_collision_winner_engine_independent(spark):
     """Two source labels mapping to the SAME expanded target: Prometheus
-    iterates canonically-sorted labels, so the sorted-last source wins.
-    All engines (and auto's two-phase boundary, which re-sorts the map)
-    must agree — the round-5 review caught entries folding in insertion
-    order, flipping the winner vs auto."""
+    iterates canonically-sorted labels, so the sorted-last source wins,
+    whatever the input map's insertion order."""
     df = spark.createDataFrame(
         [(0, {"__meta_svc_app": "S", "__meta_pod_app": "P", "job": "j"})],
         "id int, labels map<string,string>",
     )
     rules = [
-        # static prefix so auto takes the two-phase path
         {"action": "replace", "source_labels": ["job"], "target_label": "jc"},
         {"action": "hashmod", "source_labels": ["job"], "modulus": 4, "target_label": "shard"},
         {"action": "labelmap", "regex": "__meta_(?:pod|svc)_app", "replacement": "app"},
     ]
-    got = {}
-    for engine in ("map", "entries", "auto"):
-        (row,) = relabel(df, rules, engine=engine).collect()
-        got[engine] = dict(row["labels"])["app"]
+    (row,) = relabel(df, rules).collect()
     # sorted source names: __meta_pod_app < __meta_svc_app -> svc folds last
-    assert got == {"map": "S", "entries": "S", "auto": "S"}, got
+    assert dict(row["labels"])["app"] == "S"
+    assert _agrees_with_reference(df, ordered_labels(df), rules)
